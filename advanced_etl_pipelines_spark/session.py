@@ -65,6 +65,15 @@ def get_spark(
         # tripwire, not a memory bound; raise it so a loaded box or a
         # 10x corpus cannot kill a correct plan mid-broadcast.
         .config("spark.sql.broadcastTimeout", "1800")
+        # Generated-class cache (JVM-wide).  The default 100 entries is
+        # split over four Guava segments of 25, and eight short core
+        # registry queries already generate 92 classes, so an overfull
+        # segment evicts on every pass: 9-35 classes per pass recompiled
+        # with Janino and run interpreted again, the count depending on
+        # query order and on each JVM's hash layout.  With 1000 entries a
+        # repeated query recompiles nothing, and on a 4-core box the
+        # run-to-run spread of those queries' latency halved.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
